@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: two JSON lines — a full-detail line (every
   * query + stage counts) for BENCH_COMPARE tooling, then a compact final
   * line sized to fit the driver's 2000-char output-tail capture (the
@@ -13,44 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle-partition count is sized to the DATA, not the core count:
-    // at bench scale (≤100 MB inputs) 8 partitions keep every reduce task
-    // well above the tiny-task floor — measured over the full 176-query
-    // suite: 59.7 s warm / 111.8 s cold at 32 partitions vs 52.8 / 97.3
-    // at 8 (4 was warm-worse at 56.4 / 94.8). Scan stages keep their own
-    // split-derived parallelism either way. Production sizes the same
-    // knob by target partition bytes (~128-200 MB each) — same
-    // data-derived reasoning, different data volume. Overridable for
-    // experiments.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    // AQE OFF for the bench session: AQE executes every shuffle stage as
-    // its own job, and on this machine a job submission floors at ~0.1 s
-    // (measured: bare spark.range(1).count() at local[32]) — across ~60
-    // sub-second queries that re-planning tax cost 8 s wall with zero
-    // benefit at ≤100 MB inputs (measured 34.7 s → 26.6 s). Production
-    // sessions at real scale keep AQE on (skew joins, coalescing);
-    // this is a bench-harness setting, not an engine default.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      // corpus timestamp contract at construction (Tables.readerConfs
-      // re-applies defensively; see its ordering note)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // cache-registry budget sized to THIS session: 124 queries share
-      // ~30 small cached relations at bench SF, and the default LRU cap
-      // (12 — sized for memory-tight test JVMs) evicts and rebuilds them
-      // every pass (PageRank's edge cache alone measured 2.6 s warm vs
-      // 4-8 s rebuilt). Production sizes this to executor storage memory
-      // like any cache budget — same knob, same reasoning.
-      .config("graft.cache.maxLiveCorpora", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // iteration aid: SPARK_GRAFT_ONLY=comma,separated,prefixes restricts

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Diagnostic: drain one streaming shape and dump per-microbatch
@@ -13,16 +12,7 @@ object StreamProfile {
     val sfDir = args(0)
     val shape = args(1)
     val parts = if (args.length > 2) args(2) else "2"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // corpus timestamp contract at construction (Tables.readerConfs
-      // re-applies defensively; see its ordering note)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.local()
     // experiment: skip the CRC sidecar files Hadoop's checksummed
     // LocalFileSystem writes for every checkpoint/state file
     if (sys.env.get("SPARK_GRAFT_RAWFS").contains("1"))
@@ -32,12 +22,8 @@ object StreamProfile {
     spark.sparkContext.setLogLevel("WARN")
     // state-store partition count is fixed from this conf at query start
     spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // experiment knobs: GRAFT_CONF="k=v,k2=v2" lands in the runtime conf
-    // (streaming queries capture session conf at start)
-    sys.env.get("GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      })
+    // streaming queries capture the session conf at start
+    Dev.applyConf(spark)
 
     import graft.streaming.StreamingOps._
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROF_ITERS", "1").toInt

@@ -2799,10 +2799,10 @@ object ConnectorOps {
           s.read.format("loki")
             .option("endpoint", stubFor(s, d).endpoint)
             .option("default_label", "event_type")
-            // scan split count sized to the workers, not a constant: the
-            // per-line masking (log_template) is this operator's CPU and
-            // ran in 8 scan tasks on a 32-core box (0.84 s of task time)
-            .option("partitions", TextOps.hotPartitions(s).toString)
+            // scan split count = the session's shuffle width: the
+            // per-line masking (log_template) is this operator's CPU
+            .option("partitions",
+              s.sessionState.conf.numShufflePartitions.toString)
             .load()
             .filter(col("timestamp") >=
               lit("2024-01-01 00:00:00").cast("timestamp"))
@@ -2846,14 +2846,15 @@ object ConnectorOps {
     // top-5 runs through bounded heaps (no per-label sort, no window).
     ("loki_label_top_lines",
       (s: SparkSession, d: String) => {
-        // worker-sized split count: the whole-corpus scan decodes through
+        // session-width split count: the whole-corpus scan decodes through
         // parallel time slices (the loki_connector_labels scale-out
         // shape) instead of one single-threaded reader feeding the
-        // aggregation; sized to the session like drain_templates
+        // aggregation
         val counted = s.read.format("loki")
           .option("endpoint", stubFor(s, d).endpoint)
           .option("default_label", "event_type")
-          .option("partitions", TextOps.hotPartitions(s).toString)
+          .option("partitions",
+            s.sessionState.conf.numShufflePartitions.toString)
           .load()
           .filter(col("timestamp") >= lit("2024-01-01 00:00:00").cast("timestamp") &&
             col("timestamp") < lit("2024-03-01 00:00:00").cast("timestamp"))

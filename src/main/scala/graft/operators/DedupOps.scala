@@ -382,12 +382,7 @@ object DedupOps {
     // hash(sh1)-partitioned cached rows, so the join needs NO exchange at
     // all (guide §2.4 — the bucketed-table idea applied to a cached
     // relation); one repartition in the cache build replaces an exchange
-    // per consumer. Width = the SESSION setting (round-17 A/B): the r16
-    // hotPartitions widening of these layouts read 10-20% slower warm in
-    // the driver's 32-core run and no better cold — the band/prefix
-    // caches are read once per pass, so extra width is pure per-task
-    // overhead (unlike a window/agg that reuses the exchange for real
-    // CPU); the layout, not the width, is the win.
+    // per consumer.
     val prefix = ex.join(dfreq, "sh1")
       .withColumn("rn", row_number().over(wP))
       .filter(col("rn") <= col("n") - ceil(col("n") * tau).cast("int") + 1)

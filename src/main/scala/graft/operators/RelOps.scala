@@ -136,11 +136,7 @@ object RelOps {
     val s = li.sparkSession
     import s.implicits._
     val counts = li
-      // hotPartitions width: the run-walk pair expansion is the heavy
-      // leg (typed-row deser + quadratic-per-order pair emission) and
-      // ran through the session's 8 shuffle partitions (see
-      // TextOps.hotPartitions)
-      .repartition(TextOps.hotPartitions(s), col("l_orderkey"))
+      .repartition(col("l_orderkey"))
       .sortWithinPartitions("l_orderkey", "l_partkey")
       .select(col("l_orderkey").as[Long], col("l_partkey").as[Long])
       .mapPartitions(runWalkPairsF)
@@ -188,12 +184,6 @@ object RelOps {
     // are a node's out-edges — the same hub skew any per-node layout has;
     // WindowExec spills past its buffer, so a hub can't OOM a task.
     val ed = edges
-      // session width, DELIBERATELY not hotPartitions (round-17 A/B, the
-      // r16 verdict's watch item): widening this exchange to 32 read
-      // warm 0.53 / cold 4.83 s vs 0.38-0.44 / 2.50-2.74 at the session's
-      // 8 — the five round joins and the deg window all inherit the
-      // cache's width, so the widening multiplied every round's reduce
-      // tasks and the cold build paid 4 extra stages for idle width
       .repartition(col("src"))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .persist()
@@ -797,10 +787,10 @@ object RelOps {
       (s: SparkSession, d: String) => {
         val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
         orders(s, d)
-          // same-key repartition at worker parallelism — the rank +
-          // running-sum windows reuse this exchange (see hotPartitions)
+          // same-key repartition — the rank + running-sum windows reuse
+          // this exchange
           .select("o_custkey", "o_orderdate", "o_orderkey", "o_totalprice")
-          .repartition(TextOps.hotPartitions(s), col("o_custkey"))
+          .repartition(col("o_custkey"))
           .withColumn("rn", row_number().over(w))
           .withColumn("running_spend",
             round(sum("o_totalprice").over(w.rowsBetween(Window.unboundedPreceding, 0)), 2))
@@ -999,15 +989,13 @@ object RelOps {
       (s: SparkSession, d: String) => {
         val flagDim = lineitem(s, d).select(col("l_returnflag").as("flag")).distinct()
           .withColumn("flag_label", concat(lit("flag_"), col("flag")))
-        // salt width DERIVED from the parallelism the hot keys must fill
-        // (guide §2.5), not a constant 16: with ~3 distinct flags, each
-        // hot key needs ~(target cores / hot keys) shards to spread one
-        // key's rows over the machine; hotPartitions is the session's
-        // capped exchange width, so the salted key space is ≥ it and the
-        // skewed aggregate fans to every core at any deployment size.
-        // Result-invariant: the dim side carries exactly one row per
-        // (flag, salt), so any width ≥ 1 yields the identical join/agg.
-        val salt = TextOps.hotPartitions(s)
+        // salt width = the session's shuffle width, not a constant 16:
+        // the salted key space then covers every reduce partition, so
+        // the ~3 hot flags fan out over all of them at any deployment
+        // size. Result-invariant: the dim side carries exactly one row
+        // per (flag, salt), so any width ≥ 1 yields the identical
+        // join/agg.
+        val salt = s.sessionState.conf.numShufflePartitions
         val saltedDim = flagDim
           .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
         // NO spread on the fact side (measured, round 17): repartitioning
@@ -1497,12 +1485,10 @@ object RelOps {
       (s: SparkSession, d: String) => {
         val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         events(s, d)
-          // explicit narrow projection + same-key repartition at the
-          // worker parallelism: the two window passes + session aggregate
-          // all ride this one exchange (stage count unchanged), which at
-          // the session's data-sized 8 partitions held 3.1 s of task time
+          // explicit narrow projection + same-key repartition: the two
+          // window passes + session aggregate all ride this one exchange
           .select("user_id", "ts", "event_id")
-          .repartition(TextOps.hotPartitions(s), col("user_id"))
+          .repartition(col("user_id"))
           .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
           .withColumn("new_session",
             when(col("prev_ts").isNull ||
@@ -2117,22 +2103,12 @@ object RelOps {
             val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
             if (fs.exists(p)) fs.delete(p, true)
           }
-          // repartition ON the bucket key BEFORE the bucketed write
-          // (round 17): with several write tasks per bucket each bucket
-          // got several files, and the scan's declared sort order only
-          // holds for single-file buckets — so the warm join re-SORTED
-          // both sides inside every SMJ (plan: Sort under SortMergeJoin,
-          // the exact cost sortBy exists to pre-pay). Same hash family
-          // as the bucket spec → exactly one file per bucket, and the
-          // join runs sort-free off the layout.
           lineitem(s, d).select("l_orderkey", "l_extendedprice")
-            .repartition(8, col("l_orderkey"))
             .write.format("parquet").mode("overwrite")
-            .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(liT)
+            .bucketBy(8, "l_orderkey").saveAsTable(liT)
           orders(s, d).select("o_orderkey", "o_orderpriority")
-            .repartition(8, col("o_orderkey"))
             .write.format("parquet").mode("overwrite")
-            .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ordT)
+            .bucketBy(8, "o_orderkey").saveAsTable(ordT)
         }
         s.table(ordT)
           .join(s.table(liT).hint("merge"),
@@ -2332,14 +2308,6 @@ object RelOps {
           (unix_micros(date_trunc("DAY", col("ts"))) / 86400000000L)
             .cast("long").as("day"),
           col("user_id"))
-          // session-width repartition, DELIBERATELY not hotPartitions:
-          // round 16 widened this exchange and the driver's protocol
-          // measured the query 4× slower at 32 cores than at 8 (warm
-          // 0.47→1.90 s, cold →3.17 s, while the 8-core run — where the
-          // widening degenerates — stayed at 0.44 s). The ×7 fan-out
-          // dedup inside countDistinct pays per-partition hash tables;
-          // widening multiplies that constant with no compute to hide
-          // (round-17 revert, VERDICT r16 item 1).
           .repartition(col("user_id")).distinct()
         daily
           .select(col("user_id"), explode(sequence(col("day"),
@@ -2374,10 +2342,10 @@ object RelOps {
       (s: SparkSession, d: String) => {
         val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         val pairs = events(s, d)
-          // narrow projection + same-key repartition at hotPartitions:
-          // the lag window's sort held 2.2 s of task time in 8 tasks
+          // narrow projection + same-key repartition: the lag window
+          // reuses this exchange
           .select("user_id", "ts", "event_id", "event_type")
-          .repartition(TextOps.hotPartitions(s), col("user_id"))
+          .repartition(col("user_id"))
           .withColumn("prev", lag(col("event_type"), 1).over(byUser))
           .filter(col("prev").isNotNull)
           .groupBy(col("prev").as("from_type"), col("event_type").as("to_type"))

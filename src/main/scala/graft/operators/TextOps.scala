@@ -145,30 +145,6 @@ object TextOps {
     * corpus (the 100 TB case) already has scan parallelism, and adding a
     * full-corpus exchange there would be a scale-killer, not a win.
     */
-  /** Partition count for a measured-hot exchange: never below the
-    * session's shuffle setting (a real cluster sizes that to the data —
-    * it stays authoritative there), raised to the worker parallelism when
-    * the session setting is smaller (the bench session's data-sized
-    * shuffle=8 leaves 3/4 of a local[32] box idle through its few
-    * genuinely CPU-heavy sorts/windows — measured 0.4-0.9 s of task time
-    * squeezed through 8 tasks on events_sessionize / window_rank /
-    * dup_span_merge). Used as an explicit repartition ON THE OPERATOR'S
-    * OWN KEY, so the downstream window/aggregate reuses the exchange —
-    * stage count is unchanged, only its width.
-    *
-    * CAPPED at 4× the session setting (round-17, r16 ADVICE): on a large
-    * cluster defaultParallelism (total cores) can dwarf the data-sized
-    * shuffle setting, and an uncapped raise would shred these keyed
-    * exchanges (and the cache layouts built on them) into tiny shuffle
-    * blocks — the session setting stays authoritative within a small
-    * constant. The local bench shape is unchanged (max(8, min(32, 32))
-    * = 32).
-    */
-  private[graft] def hotPartitions(s: SparkSession): Int = {
-    val conf = s.sessionState.conf.numShufflePartitions
-    math.max(conf, math.min(s.sparkContext.defaultParallelism, 4 * conf))
-  }
-
   private[graft] def spreadScan(df: DataFrame): DataFrame = {
     // streaming plans can't answer a partition probe (and their
     // per-batch parallelism is the source's concern) — pass through
@@ -739,12 +715,8 @@ object TextOps {
       .select(col("doc_id"), col("pos"),
         xxhash64(col("col")).as("gh1"), xxhash64(lit(1), col("col")).as("gh2"))
     val byGram = Window.partitionBy("gh1", "gh2")
-    // widen the gram exchange to the worker parallelism (same key → the
-    // window reuses this exchange, stage count unchanged): the per-gram
-    // min/max sort is the operator's heaviest reduce side and ran at the
-    // session's data-sized 8 partitions (2.4 s of task time in 8 tasks)
     val dup = g
-      .repartition(hotPartitions(docs.sparkSession), col("gh1"), col("gh2"))
+      .repartition(col("gh1"), col("gh2"))
       .withColumn("xdoc",
         min("doc_id").over(byGram) =!= max("doc_id").over(byGram))
       .filter(col("xdoc"))

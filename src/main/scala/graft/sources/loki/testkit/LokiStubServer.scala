@@ -30,9 +30,8 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 /** Global serving-time counters across every stub instance in the JVM —
   * dev instrumentation (round 17): the connector gate rows' warm cost had
   * two candidate owners (stub serving vs Spark-side decode + operator
-  * work), and the counters attribute it. Read and reset by `graft.Prof`
-  * under `GRAFT_STUB_STATS=1`; zero overhead otherwise (three atomic
-  * bumps per request).
+  * work), and the counters attribute it. Read and reset per query by
+  * `graft.Dev prof` (three atomic bumps per request).
   */
 object LokiStubServer {
   val reqs = new java.util.concurrent.atomic.AtomicLong(0)

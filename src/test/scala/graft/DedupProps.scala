@@ -19,16 +19,7 @@ object DedupProps extends Properties("DedupPrefixJoin") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(6)
 
-  // local[4,2] matches SparkTestBase: whichever suite wins the JVM-global
-  // context race must leave task retries enabled (the connector's
-  // at-least-once test needs maxFailures=2)
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4,2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkTestBase.session
 
   private val vocab: Seq[String] = ('a' to 'l').map(c => s"w$c")
 

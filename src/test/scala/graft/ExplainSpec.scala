@@ -605,4 +605,22 @@ class ExplainSpec extends SparkTestBase {
         s"branch for $k must read only its key column:\n$p")
     }
   }
+
+  test("keyed window repartitions follow the session's shuffle width") {
+    // the per-key windows repartition on their own key at the width the
+    // session configures — no operator-side widening past it
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try {
+      for ((name, k) <- Seq(
+          "window_rank_orders" -> "o_custkey", "events_sessionize" -> "user_id")) {
+        val p = plan(name)
+        val widths = s"Exchange hashpartitioning\\($k#\\d+L?, (\\d+)\\)".r
+          .findAllMatchIn(p).map(_.group(1)).toSeq
+        assert(widths.nonEmpty && widths.forall(_ == "2"),
+          s"$name must repartition on $k into exactly 2 partitions:\n$p")
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }

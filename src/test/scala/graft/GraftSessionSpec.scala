@@ -1,49 +1,47 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** The one-call session factory must yield a session where the whole
   * library surface works without further setup: extensions (pushdown
   * rule, TopK strategy, SQL functions) and the corpus reader contract.
-  *
-  * Suites share one JVM-wide SparkSession, so this spec neither stops
-  * the session it gets nor diverges from SparkTestBase's master/
-  * partition settings — whichever suite runs first, both see a session
-  * with identical semantics (GraftSession.configure sets exactly the
-  * confs SparkTestBase pins).
+  * The shared test session is itself built on [[GraftSession.configure]].
   */
 class GraftSessionSpec extends SparkTestBase {
 
-  test("GraftSession.configure sets every library conf on the builder") {
-    // Order-independent check of configure() itself: when another suite
-    // has already created the JVM-wide session, getOrCreate ignores
-    // static confs and the runtime ones coincide with SparkTestBase's —
-    // so the wired-session test below can't catch a configure()
-    // regression. Read the builder's accumulated options directly.
-    val b = GraftSession.builder()
-    // the options map lives on the SparkSessionBuilder parent class
+  /** The options a builder has accumulated, read off the
+    * SparkSessionBuilder parent class — order-independent, unlike a
+    * getOrCreate'd session, which ignores static confs once another suite
+    * has created the JVM-wide session.
+    */
+  private def options(b: SparkSession.Builder): Map[String, String] = {
     val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
       .takeWhile(_ != null)
       .flatMap(_.getDeclaredFields)
       .find(_.getName.contains("options"))
       .getOrElse(fail("SparkSession.Builder options field not found"))
     f.setAccessible(true)
-    val opts = f.get(b).asInstanceOf[scala.collection.mutable.Map[String, String]]
-    assert(opts.get("spark.sql.extensions")
-      .contains("graft.plans.GraftExtensions"))
-    assert(opts.get("spark.sql.session.timeZone").contains("UTC"))
-    assert(opts.get("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-    assert(opts.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-      .contains("false"))
+    f.get(b).asInstanceOf[scala.collection.mutable.Map[String, String]].toMap
+  }
+
+  test("GraftSession.configure sets every library conf on the builder") {
+    val library = Map(
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+    assert(options(GraftSession.builder()) == library)
+    // the harness session: exactly the bench sizing on top of the
+    // library confs, nothing else
+    assert(options(GraftSession.local(3)) == library ++ Map(
+      "spark.master" -> "local[3]",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "false",
+      "graft.cache.maxLiveCorpora" -> "64",
+      "spark.ui.enabled" -> "false"))
   }
 
   test("GraftSession-configured getOrCreate yields a fully-wired session") {
-    val spark = GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master("local[4,2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.warehouse.dir",
-          s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "u")}")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")

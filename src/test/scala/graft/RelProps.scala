@@ -19,21 +19,7 @@ object RelProps extends Properties("RelOpsShapes") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(5)
 
-  // full SparkTestBase config block: getOrCreate is JVM-global and test
-  // order is arbitrary — if this suite wins the session race with fewer
-  // configs, every later suite silently loses them (warehouse dir,
-  // corpus parquet contract)
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4,2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "u")}")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkTestBase.session
 
   // -- skyline -------------------------------------------------------------
 

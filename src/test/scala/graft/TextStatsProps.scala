@@ -19,13 +19,7 @@ object TextStatsProps extends Properties("TextStats") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(5)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4,2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = SparkTestBase.session
 
   private val vocab: Seq[String] = ('a' to 'h').map(c => s"w$c")
 
